@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
+import scala.util.control.NonFatal
+
 /** SparkSessionExtensions entry point: registers the graft native
   * expressions as SQL functions, so they are usable from `spark.sql` /
   * `expr` strings as well as the Column API:
@@ -83,6 +85,6 @@ object GraftExtensions {
     // r18 g_dup_triangles regression; see Par.rightsize).
     try spark.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
   }
 }

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool behind PlanGuardSpec: plans every gated query (no execution)
-  * and prints one line per query — shuffle-exchange count and the
-  * presence of the two plan shapes the guard restricts (cartesian
-  * product, broadcast nested-loop join). Output is the source of the
-  * spec's pinned budgets; re-run after a plan change to see what moved.
+/** Dev tool beside PlanShapeSpec, the live plan guard: plans every gated
+  * query (no execution) and prints one line per query — shuffle-exchange
+  * count and the presence of the two plan shapes the guard watches
+  * (cartesian product, broadcast nested-loop join). Re-run after a plan
+  * change to see what moved.
   *
   * Usage: runMain graft.PlanScout [sfDir]
   */
@@ -15,7 +15,7 @@ object PlanScout {
   /** Shuffle exchanges in the (initial, pre-AQE) physical plan — the
     * deterministic planning-time count; broadcasts print as
     * BroadcastExchange and don't match. Same counting rule as
-    * BucketingSpec/PlanGuardSpec.
+    * BucketingSpec.
     */
   def shuffles(plan: String): Int =
     "Exchange hashpartitioning".r.findAllIn(plan).length

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.control.NonFatal
+
 /** Loaders for the shared parquet fixtures (TESTDATA.md).
   *
   * All gated queries read these tables; nothing is synthesized. Paths are
@@ -39,7 +41,7 @@ object Tables {
     // arrives, so keep the conf set defensively — a no-op for micros —
     // in case the fixture generation or calling session changes.
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     val path = s"$sfDir/$name.parquet"
     if (spark.conf.getOption("spark.graft.tables.schemaCache").contains("off"))
       spark.read.parquet(path)

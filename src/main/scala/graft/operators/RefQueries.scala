@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Shapes, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference engine's four query shapes (SURVEY.md §2.1), re-expressed
@@ -173,26 +173,33 @@ object RefQueries {
     * (streaming/AdaptiveAgg.scala) evaluates the SAME plan the gated
     * q3_skew_stats query is oracle-checked against, not a
     * reimplementation of the cost model.
+    *
+    * `extraAggs` are further named per-window aggregates over the
+    * `(ltw, z, cnt, total)` rows, appended after `strategy` — the
+    * adaptive loop collects its heavy-key lists in the same pass. With
+    * the default `Nil` the plan is exactly the gated one.
     */
-  def skewStatsPlan(counts: DataFrame): DataFrame = {
+  def skewStatsPlan(counts: DataFrame, extraAggs: Seq[Column] = Nil): DataFrame = {
     val lambda = 0.01
     // Same broadcast-totals shape as q3HeavyHitters (no window function).
     val totals = counts.groupBy("ltw").agg(sum("cnt").as("total"))
     val withTotal = counts.join(broadcast(totals), "ltw")
-    val stats = withTotal.groupBy("ltw").agg(
+    val aggs = Seq(
       max("total").as("m_total"),
       count(lit(1)).as("k_keys"),
       max("cnt").as("max_cnt"),
       sum(when(col("cnt") * 60 > col("total"), 1L).otherwise(0L)).as("head_num"),
-      sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("single_num"))
-    stats.select(
+      sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("single_num")) ++ extraAggs
+    val stats = withTotal.groupBy("ltw").agg(aggs.head, aggs.tail: _*)
+    val extraCols = stats.columns.takeRight(extraAggs.size).map(col)
+    stats.select(Seq(
       col("ltw"), col("m_total"), col("k_keys"), col("max_cnt"),
       (col("max_cnt") / col("m_total")).as("p1"),
       col("head_num"), col("single_num"),
       when(
         (lit(13.26) * (col("max_cnt") / col("m_total")) + lit(1.02)) * col("m_total") / lit(12.0)
           <= col("m_total") / lit(12.0) + lit(lambda) * (col("k_keys") + col("head_num") * 10 - col("single_num")),
-        lit(0L)).otherwise(lit(1L)).as("strategy"))
+        lit(0L)).otherwise(lit(1L)).as("strategy")) ++ extraCols: _*)
   }
 
   def q3SkewStats(spark: SparkSession, sfDir: String): DataFrame =

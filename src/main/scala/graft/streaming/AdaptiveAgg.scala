@@ -40,12 +40,13 @@ import graft.streaming.StreamingParity.PwEvent
   * Structured Streaming's foreachBatch hands the driver the batch as a
   * DataFrame, so the decision feeds the NEXT plan directly — driver
   * state here is a plain map ([[ControlState]]), and the per-batch
-  * decision table joins in as a broadcast (|windows| rows).
+  * decisions enter the plan as |windows|-entry literals (no decision
+  * table to broadcast, so no broadcast job per batch).
   *
-  * Scale shape: the driver sees only |windows| stat rows plus ≤ 60 heavy
-  * keys per window (the share > 1/60 threshold bounds the set size —
-  * same argument as heavyHitterBatchStats); the batch's data rows never
-  * leave the executors. The stats come from
+  * Scale shape: the driver receives |windows| stat rows, each carrying at
+  * most 59 heavy keys, in one collect (the share > 1/60 threshold bounds
+  * the set size — same argument as heavyHitterBatchStats); the batch's
+  * data rows never leave the executors. The stats come from
   * [[RefQueries.skewStatsPlan]] — the SAME plan the gated q3_skew_stats
   * query is oracle-checked against — so the streaming decision and the
   * batch-gated decision cannot drift.
@@ -102,13 +103,16 @@ object AdaptiveAgg {
     else 1
 
   /** The adaptive per-batch windowed count. Each batch:
-    *   1. per-(window, word) counts, persisted (feeds both stats and
-    *      heavy-set extraction in one aggregation);
-    *   2. skewStatsPlan → |windows| stat rows to the driver;
+    *   1. per-(window, word) counts, persisted — the one plain
+    *      aggregation over the batch's raw rows;
+    *   2. skewStatsPlan over the counts, with each window's heavy keys as
+    *      one more aggregate column → |windows| rows in ONE collect;
     *   3. per-window decision: merge carried heads, re-evaluate, ratchet;
-    *   4. execute — decision table broadcast-joined onto the batch, plain
-    *      aggregation for strategy-0 windows, salted two-stage for
-    *      strategy-1 windows, union tagged with the strategy and batch id;
+    *   4. execute — strategy-0 (HH) windows are the cached counts,
+    *      filtered to those windows (no shuffle); only when some window
+    *      is strategy 1 is the salted two-stage aggregation planned, over
+    *      that window's raw rows with its own d; the two parts union,
+    *      tagged with the strategy and batch id;
     *   5. hand the result DataFrame to `sink` (a real writer in
     *      production; the spec collects).
     */
@@ -127,14 +131,11 @@ object AdaptiveAgg {
           .agg(count(lit(1)).as("cnt"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val stats = RefQueries.skewStatsPlan(counts).collect()
-          val totals = counts.groupBy("ltw").agg(sum("cnt").as("total"))
-          val heavyRows = counts.join(broadcast(totals), "ltw")
-            .where(col("cnt") * 60 > col("total"))
-            .select("ltw", "z").collect()
-          val batchHeads: Map[Long, Set[String]] = heavyRows
-            .groupBy(_.getLong(0)).view
-            .mapValues(_.map(_.getString(1)).toSet).toMap
+          // One collect: the stats plus each window's heavy keys (share
+          // > 1/60, so at most 59 per window) as one more aggregate.
+          val stats = RefQueries.skewStatsPlan(counts, Seq(
+            collect_list(when(col("cnt") * 60 > col("total"), col("z")))
+              .as("heavy"))).collect()
           val decisions = stats.map { r: Row =>
             val ltw = r.getAs[Long]("ltw")
             val mTotal = r.getAs[Long]("m_total")
@@ -142,7 +143,7 @@ object AdaptiveAgg {
             val maxCnt = r.getAs[Long]("max_cnt")
             val singleNum = r.getAs[Long]("single_num")
             val mergedHeads = state.headSets.getOrElse(ltw, Set.empty) ++
-              batchHeads.getOrElse(ltw, Set.empty)
+              r.getAs[scala.collection.Seq[String]]("heavy")
             val raw = decideStrategy(mTotal, kKeys, maxCnt,
               mergedHeads.size.toLong, singleNum)
             val ratcheted = math.max(raw, state.strategies.getOrElse(ltw, 0))
@@ -153,28 +154,28 @@ object AdaptiveAgg {
               Salting.dynamicD(maxCnt, mTotal, NumWorkers))
           }
           state.decisions ++= decisions
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val decisionDf = decisions.toSeq
-            .map(d => (d.ltw, d.strategy.toLong, d.d.toLong))
-            .toDF("ltw", "strategy", "d")
-          val tagged = withLtw.join(broadcast(decisionDf), Seq("ltw"))
-          val plain = tagged.where(col("strategy") === 0)
-            .groupBy("ltw", "word", "strategy")
-            .agg(count(lit(1)).as("cnt"))
+          val (hh, apk) = decisions.toSeq.partition(_.strategy == 0)
+          // HH windows are the plain aggregation `counts` already holds:
+          // read them from the cache, no second pass over the raw rows.
+          val plain = counts
+            .where(array_contains(typedLit(hh.map(_.ltw)), col("ltw")))
+            .select(col("ltw"), col("z").as("word"), col("cnt"),
+              lit(0L).as("strategy"))
           // Strategy-1 windows salt by THEIR OWN measured-skew d (the
           // dynamic-d policy): a heavily-skewed window spreads over more
           // replicas than a mildly-skewed one in the same batch.
-          val salted = tagged.where(col("strategy") === 1)
-            .withColumn("salt",
-              pmod(col("event_time") + col("port"), col("d")))
-            .groupBy("ltw", "word", "strategy", "salt")
-            .agg(count(lit(1)).as("pcnt"))
-            .groupBy("ltw", "word", "strategy")
-            .agg(sum("pcnt").as("cnt"))
-          sink(plain.select("ltw", "word", "cnt", "strategy")
-            .unionByName(salted.select("ltw", "word", "cnt", "strategy"))
-            .withColumn("batch_id", lit(batchId)))
+          val result = if (apk.isEmpty) plain else {
+            val d = element_at(typedLit(apk.map(x => x.ltw -> x.d.toLong).toMap),
+              col("ltw"))
+            val salted = withLtw.where(d.isNotNull)
+              .withColumn("salt", pmod(col("event_time") + col("port"), d))
+              .groupBy("ltw", "word", "salt")
+              .agg(count(lit(1)).as("pcnt"))
+              .groupBy("ltw", "word")
+              .agg(sum("pcnt").as("cnt"))
+            plain.unionByName(salted.withColumn("strategy", lit(1L)))
+          }
+          sink(result.withColumn("batch_id", lit(batchId)))
         } finally {
           counts.unpersist()
           ()

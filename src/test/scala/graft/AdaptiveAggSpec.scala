@@ -3,6 +3,8 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -123,5 +125,68 @@ class AdaptiveAggSpec extends SparkSpec {
           s"row $r")
       }
     }
+  }
+
+  /** Runs `batch` as the one micro-batch of a fresh adaptive query;
+    * returns the decisions, every emitted (ltw, word, cnt, strategy) row,
+    * and the optimized plan of the DataFrame handed to the sink (taken
+    * inside the sink, while the batch's counts are still cached).
+    */
+  private def runBatch(batch: Seq[PwEvent]) = {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val input = MemoryStream[PwEvent]
+    val state = new AdaptiveAgg.ControlState
+    val out = mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
+    val plans = mutable.ArrayBuffer.empty[LogicalPlan]
+    val sink = (df: DataFrame) => {
+      plans += df.queryExecution.optimizedPlan
+      out ++= df.collect().map(r => (r.getAs[Long]("ltw"),
+        r.getAs[String]("word"), r.getAs[Long]("cnt"), r.getAs[Long]("strategy")))
+      ()
+    }
+    val query = AdaptiveAgg
+      .adaptiveWindowedCount(input.toDS(), state, sink).start()
+    try { input.addData(batch); query.processAllAvailable() }
+    finally query.stop()
+    val Seq(plan) = plans.toSeq
+    (state.decisions.toSeq, out.toSeq, plan)
+  }
+
+  private def readsCachedCounts(p: LogicalPlan): Boolean =
+    p.collectFirst { case r: InMemoryRelation => r }.nonEmpty
+
+  private def plansSalt(p: LogicalPlan): Boolean =
+    p.collect { case a: Aggregate => a }
+      .exists(_.groupingExpressions.exists(_.references.exists(_.name == "salt")))
+
+  test("one batch with a uniform and a skewed window: HH from the cached counts, APK salted, counts exact") {
+    val s = spark
+    import s.implicits._
+    val mixed = uniform(30, 40, 3, "m") ++ skewed(40)
+    val (d, out, p) = runBatch(mixed)
+    // The two windows carry the planted arithmetic of the class doc.
+    assert(d.map(x => (x.ltw, x.rawStrategy, x.strategy, x.d)) ===
+      Seq((30L, 0, 0, 2), (40L, 1, 1, 11)))
+    assert(out.filter(_._1 == 30L).map(_._4).distinct === Seq(0L))
+    assert(out.filter(_._1 == 40L).map(_._4).distinct === Seq(1L))
+    val expected = mixed.toDF()
+      .groupBy(expr("event_time div 1000").as("ltw"), col("word"))
+      .agg(count(lit(1)).as("cnt")).collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    val got = out.map(r => (r._1, r._2) -> r._3)
+    assert(got.size === expected.size, "one row per (window, word)")
+    assert(got.toMap === expected)
+    // Both parts are in the one plan: the cached counts and the salt.
+    assert(readsCachedCounts(p) && plansSalt(p), p.treeString)
+  }
+
+  test("an all-HH batch is served from the cached counts and plans no salted aggregation") {
+    val (d, out, p) = runBatch(uniformBatch)
+    assert(d.map(_.strategy) === Seq(0))
+    assert(out.size === 40 && out.forall(r => r._3 == 3L && r._4 == 0L))
+    assert(readsCachedCounts(p), s"HH rows must come from the cached counts:\n${p.treeString}")
+    assert(!plansSalt(p), s"no salted aggregation for an all-HH batch:\n${p.treeString}")
   }
 }
